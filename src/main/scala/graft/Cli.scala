@@ -70,7 +70,7 @@ object Cli {
       val maxPackets = rest.headOption.map(_.toInt).getOrElse(50)
       val apid = rest.drop(1).headOption.map(_.toInt)
       val spark = session()
-      val packets = graft.sources.CcsdsSource.readPackets(spark, path)
+      val packets = spark.read.format("ccsds").option("path", path).load()
       val filtered = apid.fold(packets)(a =>
         operators.Telemetry.apidFilter(packets, include = Seq(a)))
       operators.Telemetry.inspect(filtered, maxPackets).show(maxPackets, truncate = false)

@@ -57,7 +57,7 @@ object Calibration {
       case ((engAcc, unitAcc, idAcc), e) =>
         val hit = col("name") === e.parameter_name && calibrable
         (when(hit, engExpr(raw, e)).otherwise(engAcc),
-          when(hit, coalesce(e.unit.map(lit).getOrElse(lit(null)), unitAcc)).otherwise(unitAcc),
+          e.unit.fold(unitAcc)(u => when(hit, lit(u)).otherwise(unitAcc)),
           when(hit, lit(e.method)).otherwise(idAcc))
     }
     samples

@@ -1,19 +1,16 @@
 package graft.sources
 
 import graft.telemetry.PacketRow
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** CCSDS space-packet stream reader.
+/** CCSDS space-packet stream reader over in-memory streams.
   *
-  * Behavior of the reference binary extractor
-  * (/root/reference/src/mdp/plugins/extractors/binary.py:58-136)
-  * re-expressed for Spark: `spark.read.format("binaryFile")` supplies one
-  * row per file; a flatMap walks each file's bytes into packet rows. The
-  * reference's `batch_size` disappears (Spark partitions replace hand
-  * batching) and the reference's whole-file `BytesIO` read is kept only
-  * per-task (binaryFile already materializes per-file content; files are
-  * the parallelism unit — a variable-length packet stream with no sync
-  * markers is not safely splittable mid-file).
+  * Behavior of the reference binary extractor (binary.py:58-136): the
+  * framing walk itself is [[CcsdsFramer]], which the splittable `ccsds`
+  * V2 source (`v2/CcsdsDataSource.scala`) runs over Hadoop byte ranges;
+  * here it runs over one whole stream held in memory, for the streaming
+  * file source and for fixtures. The reference's `batch_size` disappears
+  * (Spark partitions replace hand batching).
   *
   * The reference resyncs by `continue` after a failed 6-byte header parse
   * (binary.py:94-97); since any 6 bytes parse structurally, the only real
@@ -34,74 +31,22 @@ object CcsdsSource {
       groundReceiptTime: Option[Double] = None)
 
   /** Parse one contiguous packet stream into rows (pure; test-friendly). */
-  def parseStream(bytes: Array[Byte], opts: Options): Iterator[PacketRow] =
+  def parseStream(bytes: Array[Byte], opts: Options): Iterator[PacketRow] = {
+    val f = new CcsdsFramer(
+      p => new java.io.ByteArrayInputStream(bytes, p.toInt, bytes.length - p.toInt),
+      0L, bytes.length, opts, resyncWindow = 0)
     new Iterator[PacketRow] {
-      private var pos = 0
-      private var nextRow: PacketRow = _
-      private def advance(): Unit = {
-        nextRow = null
-        while (nextRow == null) {
-          if (opts.frameSync) {
-            pos = indexOfMarker(bytes, pos)
-            if (pos < 0) return
-            pos += SyncMarker.length
-          }
-          if (pos + HeaderSize > bytes.length) return
-          val word0 = ((bytes(pos) & 0xff) << 8) | (bytes(pos + 1) & 0xff)
-          val word1 = ((bytes(pos + 2) & 0xff) << 8) | (bytes(pos + 3) & 0xff)
-          val word2 = ((bytes(pos + 4) & 0xff) << 8) | (bytes(pos + 5) & 0xff)
-          val apid = word0 & 0x7ff
-          val dataLen = word2 + 1
-          if (pos + HeaderSize + dataLen > bytes.length) { pos = bytes.length; return }
-          val fieldStart = pos + HeaderSize
-          pos = fieldStart + dataLen
-          if (opts.apidFilter.forall(_.contains(apid))) {
-            val secFlag = (word0 >> 11) & 0x1
-            val secLen = if (secFlag == 1) math.min(opts.secHdrLength, dataLen) else 0
-            nextRow = PacketRow(
-              version = (word0 >> 13) & 0x7,
-              type_flag = (word0 >> 12) & 0x1,
-              sec_hdr_flag = secFlag,
-              apid = apid,
-              seq_flags = (word1 >> 14) & 0x3,
-              seq_count = word1 & 0x3fff,
-              data_length = word2,
-              secondary_header = java.util.Arrays.copyOfRange(bytes, fieldStart, fieldStart + secLen),
-              user_data = java.util.Arrays.copyOfRange(bytes, fieldStart + secLen, fieldStart + dataLen),
-              source_time_tai = None,
-              ground_receipt_time = opts.groundReceiptTime,
-              source_id = opts.sourceId)
-          }
-        }
+      private var more = f.next()
+      override def hasNext: Boolean = more
+      override def next(): PacketRow = {
+        if (!more) throw new NoSuchElementException("end of packet stream")
+        val row = PacketRow(
+          f.version, f.typeFlag, f.secHdrFlag, f.apid, f.seqFlags, f.seqCount, f.dataLength,
+          f.secondaryHeader, f.userData, None, opts.groundReceiptTime, opts.sourceId)
+        more = f.next()
+        row
       }
-      advance()
-      override def hasNext: Boolean = nextRow != null
-      override def next(): PacketRow = { val r = nextRow; advance(); r }
     }
-
-  private def indexOfMarker(bytes: Array[Byte], from: Int): Int = {
-    var i = math.max(from, 0)
-    val last = bytes.length - SyncMarker.length
-    while (i <= last) {
-      if (bytes(i) == SyncMarker(0) && bytes(i + 1) == SyncMarker(1) &&
-          bytes(i + 2) == SyncMarker(2) && bytes(i + 3) == SyncMarker(3)) return i
-      i += 1
-    }
-    -1
-  }
-
-  /** Read CCSDS packet files into a packet DataFrame (schema = PacketRow).
-    * Parallelism = files; APID filtering happens during the parse (the
-    * reference's scan-level pushdown, binary.py:103-104).
-    */
-  def readPackets(spark: SparkSession, path: String, opts: Options = Options()): DataFrame = {
-    import spark.implicits._
-    val files: Dataset[(String, Array[Byte])] = spark.read
-      .format("binaryFile")
-      .load(path)
-      .select("path", "content")
-      .as[(String, Array[Byte])]
-    files.flatMap { case (_, content) => parseStream(content, opts) }.toDF()
   }
 
   /** In-memory variant for fixtures/tests. */

@@ -103,6 +103,34 @@ class CcsdsDataSourceSpec extends SparkSpec {
     assert(err.getMessage.contains("does not exist"))
   }
 
+  /** Plans a framed read with one option set; returns the error messages. */
+  private def planningError(option: String, value: String): List[String] = {
+    val (f, _) = markerFramedFile(10)
+    val err = intercept[Exception] {
+      spark.read.format("ccsds").option("path", f.toString).option("frame_sync", "true")
+        .option(option, value).load().queryExecution.executedPlan
+    }
+    Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .flatMap(e => Option(e.getMessage)).toList
+  }
+
+  test("split_size <= 0 is rejected when the scan is planned") {
+    for (v <- Seq("0", "-1")) {
+      val msgs = planningError("split_size", v)
+      assert(msgs.exists(_.contains("split_size")), msgs.mkString(" | "))
+    }
+  }
+
+  test("negative resync_window is rejected when the scan is planned") {
+    val msgs = planningError("resync_window", "-1")
+    assert(msgs.exists(_.contains("resync_window")), msgs.mkString(" | "))
+  }
+
+  test("negative sec_hdr_length is rejected when the scan is planned") {
+    val msgs = planningError("sec_hdr_length", "-1")
+    assert(msgs.exists(_.contains("sec_hdr_length")), msgs.mkString(" | "))
+  }
+
   test("unframed file reads as a single partition") {
     val dir = java.nio.file.Files.createTempDirectory("v2plain")
     val f = dir.resolve("plain.bin")

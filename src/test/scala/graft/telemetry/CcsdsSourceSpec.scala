@@ -76,12 +76,13 @@ class CcsdsSourceSpec extends SparkSpec {
     assert(rows.size == 9)
   }
 
-  test("readPackets parallelizes across files via binaryFile") {
+  test("format(ccsds) reads a two-file glob, one partition per file") {
     val dir = java.nio.file.Files.createTempDirectory("ccsds")
     Fixtures.writeHkFile(dir.resolve("a.bin"), 20)
     Fixtures.writeHkFile(dir.resolve("b.bin"), 30)
-    val df = CcsdsSource.readPackets(spark, dir.toString + "/*.bin",
-      Options(secHdrLength = 4))
+    val df = spark.read.format("ccsds").option("path", dir.toString + "/*.bin")
+      .option("sec_hdr_length", "4").load()
+    assert(df.rdd.getNumPartitions == 2)
     assert(df.count() == 50)
     assert(df.select("apid").distinct().collect().map(_.getInt(0)).toSeq == Seq(0x100))
   }

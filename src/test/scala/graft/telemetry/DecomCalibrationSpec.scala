@@ -120,6 +120,31 @@ class DecomCalibrationSpec extends SparkSpec {
     assert(eng == Seq(-2.0, -1.5, 0.0, 2.0))
   }
 
+  test("calibration unit expression grows linearly; unitless entries and null raws keep the unit") {
+    import spark.implicits._
+    val samples = Seq(("a", Some(1.0), "V"), ("b", None, "A"), ("b", Some(2.0), "A"))
+      .toDF("name", "raw_value", "unit")
+      .withColumn("eng_value", col("raw_value"))
+      .withColumn("calibration_id", lit(null).cast("string"))
+    def unitNodes(n: Int): Int = {
+      val entries = (1 to n).map(i =>
+        CalibrationEntry(s"p$i", "polynomial", Some(s"u$i"), coefficients = Seq(0.0, 1.0)))
+      Calibration(samples, entries).queryExecution.analyzed
+        .flatMap(_.expressions)
+        .collectFirst { case a: org.apache.spark.sql.catalyst.expressions.Alias if a.name == "unit" => a.child }
+        .get.collect { case e => e }.size
+    }
+    val (n1, n5, n10) = (unitNodes(1), unitNodes(5), unitNodes(10))
+    assert((n10 - n5) * 4 == (n5 - n1) * 5, s"unit expression nodes: 1 -> $n1, 5 -> $n5, 10 -> $n10")
+
+    val cal = Calibration(samples, Seq(
+      CalibrationEntry("a", "polynomial", None, coefficients = Seq(0.0, 2.0)),
+      CalibrationEntry("b", "polynomial", Some("mA"), coefficients = Seq(0.0, 1000.0))))
+    val units = cal.select("name", "raw_value", "unit").as[(String, Option[Double], String)]
+      .collect().toSet
+    assert(units == Set(("a", Some(1.0), "V"), ("b", None, "A"), ("b", Some(2.0), "mA")))
+  }
+
   test("flagship end-to-end: parse -> decom -> calibrate -> tidy/wide") {
     val samples = Calibration(Decom(hkPackets, Fixtures.hkParamDefs), Fixtures.hkCalibrations)
     val tidy = Telemetry.tidy(samples)
